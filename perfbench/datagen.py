@@ -4,6 +4,11 @@ The benchmark owns its inputs: a program change cannot change them. The
 tables have the schemas and value domains of the program's TPC-H-style
 corpus (region, nation, customer, supplier, part, orders, lineitem, events,
 documents, embeddings), scaled by ``sf`` (lineitem = 6 M x sf rows).
+Timestamps (``o_orderdate``, ``l_shipdate``, ``events.ts``) are naive
+``timestamp[us]``, the unit the sf0.001/sf0.01/sf0.1 corpus files store.
+FIXTURES.md describes ``events.ts`` as ``timestamp[ns]``; the catalog reads
+that too (as a long, then ``timestamp_micros(ts div 1000)``), but the
+corpus the program runs on does not use it, so neither do these inputs.
 
 Row *content* comes from a fixed generator seed, so every query result is
 the same for every run seed. The run seed only permutes the row order

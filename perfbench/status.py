@@ -124,6 +124,20 @@ def parse_metric(text: str) -> float:
     return float(m.group(1).replace(",", "")) * _UNITS.get(m.group(2), 1.0)
 
 
+def jvm_heap_mb(spark) -> dict[str, float]:
+    """The driver JVM's heap from its management beans: the ``-Xmx`` cap,
+    what is committed now, and the sum of the heap pools' peak use."""
+    mgmt = spark._jvm.java.lang.management.ManagementFactory
+    heap = mgmt.getMemoryMXBean().getHeapMemoryUsage()
+    pools = mgmt.getMemoryPoolMXBeans()
+    peak = sum(
+        pools.get(i).getPeakUsage().getUsed()
+        for i in range(pools.size())
+        if pools.get(i).getType().name() == "HEAP"
+    )
+    return {"max": heap.getMax() / MB, "committed": heap.getCommitted() / MB, "peak_used": peak / MB}
+
+
 # ------------------------------------------------------ Spark status stores
 
 

@@ -7,11 +7,11 @@ state belong to one workload. One client runs one query at a time on
 entry points (``get_spark``, ``load_tables``, ``QUERIES[name].fn``) and
 observes it through Spark's status stores and ``/proc`` (see status.py).
 
-Phases: set-up (three times, see ``_setup``), one cold pass, steady passes
-until ``--seconds`` have elapsed (at least two), then the output check
-against each query's DuckDB oracle. With ``--trace 1`` steady passes
-alternate untraced and traced; traced passes record spans
-(query -> queries.build / plans.plan / spark_exec.run, and
+Phases: the cold set-up, one cold pass, steady passes until ``--seconds``
+have elapsed (at least three), the output check against each query's
+DuckDB oracle, then two warm set-ups (see ``_warm_setups``). With
+``--trace 1`` steady passes alternate untraced and traced; traced passes
+record spans (query -> queries.build / plans.plan / spark_exec.run, and
 streaming.trigger under queries.build) and per-layer counters.
 """
 
@@ -150,15 +150,8 @@ class Run:
     # ------------------------------------------------------------ set-up
 
     def _setup(self) -> None:
-        """Set up ``SETUPS`` times and keep the median as ``setup_s``.
-
-        The first set-up runs from process start (interpreter, imports,
-        JVM launch, session, registry, catalog) and is ``cold_setup_s``.
-        Each later one stops the session and builds a new session and
-        catalog on the running JVM; the import time of the first is added,
-        because a new process would pay it again. The JVM launch cannot be
-        repeated inside one process, so the median is a warm set-up.
-        """
+        """The cold set-up, from process start (interpreter, imports, JVM
+        launch, session, registry, catalog): ``cold_setup_s``."""
         from flink_ci_flink_spark.catalog import load_tables
         from flink_ci_flink_spark.queries import QUERIES
         from flink_ci_flink_spark.session import get_spark
@@ -174,27 +167,37 @@ class Run:
         t2 = time.time()
         load_tables(spark, self.args.data_dir)
         t3 = time.time()
-        setups = [t3 - self.args.spawn_time - (t2 - t1)]
+        self.setups = [t3 - self.args.spawn_time - (t2 - t1)]
         if self.args.trace:
             self.layer["catalog.load_jobs"] = len(cold_status.jobs_since(last_job))
         self.layer.update({
             "session.import_s": import_s,
             "session.start_s": t1 - t0,
             "catalog.load_s": t3 - t2,
-            "session.cold_setup_s": setups[0],
         })
-        for _ in range(SETUPS - 1):
-            a = time.time()
-            spark.stop()
-            spark = get_spark("perfbench")
-            load_tables(spark, self.args.data_dir)
-            setups.append(import_s + time.time() - a)
-        self.setups = setups
         self.spark = spark
         if self.args.trace:
             self.status = status.SparkStatus(spark)
             self.progress = _progress_listener()
             spark.streams.addListener(self.progress)
+
+    def _warm_setups(self) -> None:
+        """Set up ``SETUPS - 1`` more times, after the passes and the check
+        so that the cold pass runs on a fresh JVM. Each stops the session
+        and builds a new session and catalog on the running JVM; the import
+        time of the cold set-up is added, because a new process would pay
+        it again. The JVM launch cannot be repeated inside one process, so
+        these set-ups exclude it, and the median of all of them
+        (``setup_s``) is a warm set-up."""
+        from flink_ci_flink_spark.catalog import load_tables
+        from flink_ci_flink_spark.session import get_spark
+
+        for _ in range(SETUPS - 1):
+            a = time.time()
+            self.spark.stop()
+            self.spark = get_spark("perfbench")
+            load_tables(self.spark, self.args.data_dir)
+            self.setups.append(self.layer["session.import_s"] + time.time() - a)
 
     # ------------------------------------------------------------ queries
 
@@ -417,9 +420,12 @@ class Run:
             traced = bool(self.args.trace) and len(steady) % 2 == 1
             steady.append(self._pass("steady", traced))
         t_passes = time.time()
+        # peak RSS is sampled up to here: the check's DuckDB results and
+        # pandas frames are the benchmark's, not the program's
         check = self._check()
-        self._sample_hwm()
+        heap = status.jvm_heap_mb(self.spark)
         t_check = time.time()
+        self._warm_setups()
         env1 = status.machine_env()
         untraced = [p for p in steady if not p["traced"]]
         result = {
@@ -431,10 +437,12 @@ class Run:
                 "setup": t_setup - self.args.spawn_time,
                 "passes": t_passes - t_setup,
                 "check": t_check - t_passes,
+                "warm_setups": time.time() - t_check,
             },
             "peak_rss_mb_by_process": sorted(
                 (role, round(kb / 1024, 1)) for role, kb in self.hwm.values()
             ),
+            "jvm_heap_mb": heap,
             "passes": [
                 {k: p[k] for k in ("kind", "traced", "wall_s", "cpu_s", "query_s", "query_cpu_s")}
                 for p in [first] + steady
@@ -450,6 +458,7 @@ class Run:
             },
             "end_to_end": {
                 "setup_s": statistics.median(self.setups),
+                "cold_setup_s": self.setups[0],
                 "first_pass_s": first["wall_s"],
                 "wall_s": sum_of_medians(untraced),
                 "cpu_s": sum_of_medians(untraced, "query_cpu_s"),
