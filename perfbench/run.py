@@ -135,7 +135,7 @@ def report(result: dict, specs: list[dict], trace: int) -> dict:
     print("peak_rss_mb_by_process " + json.dumps(result["peak_rss_mb_by_process"]))
     print("jvm_heap_mb " + json.dumps({k: round(v, 1) for k, v in result["jvm_heap_mb"].items()}))
     for p in result["passes"]:
-        print(f"pass {p['kind']:6s} traced={int(p['traced'])} wall_s={p['wall_s']:.3f} cpu_s={p['cpu_s']:.3f} "
+        print(f"pass {p['kind']:6s} traced={int(p['traced'])} wall_s={p['wall_s']:.3f} cpu_s={p['cpu_s']:.3f} jit_s={p['jit_s']:.3f} "
               + " ".join(f"{q}={t:.2f}" for q, t in p["query_s"].items()))
     for c in result["check"]:
         print(f"check {c['query']}: " + (json.dumps(c) if c["ok"] else "FAILED " + c["error"]))
@@ -182,7 +182,7 @@ def steadiness(root: str, bench: dict, seconds: float) -> int:
     metric's bound, and the two medians within the bound of each other.
     Whether the spread is also within a third of the bound (the steadiness
     target) is printed and does not decide the exit code."""
-    from worker import sum_of_medians
+    from worker import UNBOUNDED, sum_of_medians
 
     ok = True
     for wl in (w["name"] for w in bench["workloads"]):
@@ -198,7 +198,7 @@ def steadiness(root: str, bench: dict, seconds: float) -> int:
                 print(f"# {wl} seed {seed}: " + json.dumps(res), flush=True)
             sets.append(values)
         traced = run_once(root, wl, 1, seconds, 1)
-        for spec in bench["end_to_end"] + [{"name": "wall_s", "bound": None}]:
+        for spec in bench["end_to_end"] + [{"name": n, "bound": None} for n in UNBOUNDED]:
             name, bound = spec["name"], spec["bound"]
             a, b = (_quartiles(s[name]) for s in sets)
             spread = max((q[2] - q[0]) / q[1] for q in (a, b))

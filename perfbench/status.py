@@ -58,14 +58,41 @@ def process_tree(root: int) -> dict[int, str]:
     return tree
 
 
+# Last CPU reading of every JIT compiler thread seen, by (pid, tid, start
+# time). HotSpot stops compiler threads when its queue drains, and a
+# stopped thread's CPU leaves /proc/<pid>/task; its last reading stays here.
+_compiler_cpu: dict[tuple[int, str, str], float] = {}
+
+
+def _read_compiler_threads(pid: int) -> None:
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:
+        return
+    for tid in tids:
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                raw = f.read()
+        except OSError:
+            continue
+        if "CompilerThre" not in raw[raw.index("(") + 1 : raw.rindex(")")]:
+            continue
+        fields = raw[raw.rindex(")") + 2 :].split()
+        _compiler_cpu[(pid, tid, fields[19])] = (int(fields[11]) + int(fields[12])) / CLK_TCK
+
+
 def tree_cpu(root: int) -> dict[str, float]:
-    """CPU seconds by role, including reaped children of each process."""
+    """CPU seconds by role, including reaped children of each process.
+    ``jit`` is the part of ``jvm`` spent in the JIT compiler threads."""
     out = {"driver": 0.0, "jvm": 0.0, "pyworker": 0.0}
     for pid, role in process_tree(root).items():
         fields = stat_fields(pid)
         if fields is not None:
             out[role] += sum(int(x) for x in fields[12:16]) / CLK_TCK
+            if role == "jvm":
+                _read_compiler_threads(pid)
     out["total"] = out["driver"] + out["jvm"] + out["pyworker"]
+    out["jit"] = sum(_compiler_cpu.values())
     return out
 
 
